@@ -7,11 +7,26 @@ embeddings) live as one parquet file per table under
 
 At cluster scale the same loaders point at partitioned parquet/Delta
 directories; nothing here assumes single-file inputs.
+
+Besides the loaders, this module holds the two driver-side helpers
+every size-based plan decision goes through:
+
+* ``table_stats`` — a table's rows (summed parquet footers) and bytes
+  (summed data-file sizes), for a single file or a directory of part
+  files, read at call time without a Spark job: the catalog-statistics
+  lookup a cost-based optimizer makes instead of scanning. ``None``
+  ("unknown") for a remote or missing path, and each caller then
+  keeps its at-scale-safe side (a ``count()`` for rows, the cached
+  tier for bytes).
+* ``memo`` — the session-scoped store for persisted intermediates
+  that several queries share (basket analytics, overlap baskets),
+  keyed like the load cache; ``clear_memo`` unpersists it.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +65,48 @@ def invalidate(sf_dir: str | None = None) -> None:
             del per_session[key]
 
 
+# session → {(sf_dir, name) → persisted frame or tuple of frames}:
+# intermediates that several queries share, keyed like _LOAD_CACHE.
+# One sf_dir's frames live per session — entering a new scale (bench
+# ladders iterate sf0.001 -> sf1) evicts the old scale's persisted
+# frames instead of accumulating MEMORY_AND_DISK storage for the
+# life of the session.
+_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], object]]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def memo(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[], object]
+):
+    """The memoized ``build()`` result for ``(sf_dir, name)`` in this
+    session; a miss on a new ``sf_dir`` first unpersists the frames
+    of every other ``sf_dir``."""
+    per_session = _MEMO.setdefault(spark, {})
+    key = (sf_dir, name)
+    if key not in per_session:
+        for k in [k for k in per_session if k[0] != sf_dir]:
+            _unpersist(per_session.pop(k))
+        per_session[key] = build()
+    return per_session[key]
+
+
+def clear_memo() -> None:
+    """Unpersist and drop every memoized frame of every session."""
+    for per_session in _MEMO.values():
+        for frames in per_session.values():
+            _unpersist(frames)
+        per_session.clear()
+
+
+def _unpersist(frames) -> None:
+    for df in frames if isinstance(frames, tuple) else (frames,):
+        try:
+            df.unpersist()
+        except Exception:  # session already stopped — nothing to free
+            pass
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -72,6 +129,45 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     per_session[key] = df
     return df
+
+
+class TableStats(NamedTuple):
+    rows: int
+    bytes: int
+
+
+def table_stats(sf_dir: str, name: str) -> TableStats | None:
+    """Rows and bytes of table ``name`` from its parquet footers and
+    file sizes — a single file or a directory of part files (hidden
+    ``_``/``.`` entries skipped, as Spark's file index does). Read in
+    the calling process at call time; runs no Spark job. ``None``
+    means unknown: a remote or missing path."""
+    import pyarrow.parquet as pq
+
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if "://" in path:
+        return None
+    try:
+        files = [path]
+        if os.path.isdir(path):
+            files = []
+            for root, dirs, names in os.walk(path):
+                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+                files += [os.path.join(root, f) for f in names
+                          if not f.startswith(("_", "."))]
+        return TableStats(
+            rows=sum(pq.read_metadata(f).num_rows for f in files),
+            bytes=sum(os.stat(f).st_size for f in files),
+        )
+    except OSError:
+        return None
+
+
+def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Row count of table ``name`` for a tier hint or cutoff: the
+    footer stats, or one ``count()`` job when they are unknown."""
+    st = table_stats(sf_dir, name)
+    return st.rows if st else load(spark, sf_dir, name).count()
 
 
 def widen(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -127,12 +223,3 @@ def events_since(
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view (mirrors the DuckDB oracle
-    environment, where the same names are pre-registered views)."""
-    dfs = load_all(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

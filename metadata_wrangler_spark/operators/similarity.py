@@ -166,7 +166,6 @@ def lsh_cosine_topk(
     probe_hamming: int = 0,
     query_pred=None,
     corpus_count_hint: int | None = None,
-    fused_pair_budget: int | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k: candidates share the hyperplane
     bucket, exact cosine re-ranks within the bucket.
@@ -179,13 +178,13 @@ def lsh_cosine_topk(
     corpus side.
 
     Adaptive two-tier (round 10, the multitable/IVF fused-scan
-    economics — see ``FUSED_PAIR_BUDGET``): within the pair budget,
-    candidate generation needs no join — the probed-bucket →
-    query-list map is computed driver-side from the bounded query
-    matrix, and one ``mapInPandas`` corpus pass computes each
-    batch's bucket codes (the same left-fold sign chain as
-    ``_bucket_sql``) and scores each bucket block against its
-    probing queries in numpy; the per-candidate-pair interpreted
+    economics — see ``FUSED_PAIR_BUDGET`` and ``_ann_topk``): within
+    the pair budget, candidate generation needs no join — the
+    probed-bucket → query-list map is computed driver-side from the
+    bounded query matrix, and one ``mapInPandas`` corpus pass
+    computes each batch's bucket codes (the same left-fold sign
+    chain as ``_bucket_sql``) and scores each bucket block against
+    its probing queries in numpy; the per-candidate-pair interpreted
     HOF dot of the join tier disappears. Past the budget: the
     original bucket equi-join — at scale, bucket the corpus ONCE
     (write bucketed parquet / cluster by bucket) and it becomes a
@@ -194,15 +193,12 @@ def lsh_cosine_topk(
     BOTH tiers (ADVICE round-9 rule).
     """
     import numpy as np
-    import pandas as pd
 
     if probe_hamming > 2:
         raise ValueError(
             "probe_hamming > 2 is not implemented (probe count grows "
             f"as C(bits, d); got {probe_hamming})"
         )
-    if fused_pair_budget is None:
-        fused_pair_budget = FUSED_PAIR_BUDGET
     n_bits = len(planes)
     masks = [0]
     if probe_hamming > 0:
@@ -213,168 +209,83 @@ def lsh_cosine_topk(
             for i in range(n_bits)
             for j in range(i + 1, n_bits)
         ]
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
 
-    qdf = (
-        corpus.where(query_pred(F.col(id_col)))
-        if query_pred is not None
-        else queries
-    )
-    qdf = qdf.where(F.col(vec_col).isNotNull())
-    # Bounded query matrix — the broadcast side, with the contract
-    # ENFORCED: the collect is capped (limit pushdown, never an
-    # unbounded driver fetch) and an over-cap query set routes to
-    # the join tier, which never ships the matrix.
-    qrows, over_cap = _collect_query_matrix(qdf, id_col, vec_col)
-    if not qrows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, corpus_id long, cosine double, rank int"
-        )
-    if over_cap:
-        import warnings
-
-        warnings.warn(
-            f"lsh_cosine_topk: query set exceeds ANN_QUERY_CAP="
-            f"{ANN_QUERY_CAP}; falling back to the bucket-join tier "
-            "(the fused tier requires a driver-bounded query matrix)",
-            stacklevel=2,
-        )
-    else:
-        q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-        qm = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-        nq, dim = qm.shape
-
-        # ---- tier probe (FUSED_PAIR_BUDGET economics) ----
-        n_corpus = corpus_count_hint
-        if n_corpus is None:
-            cap = max(fused_pair_budget // nq, 1)
-            n_corpus = corpus.select(id_col).limit(cap + 1).count()
-        over_cap = n_corpus * nq > fused_pair_budget
-    if not over_cap:
+    def fused_tier(q_ids, qm):
         plane_arrs = [np.asarray(p, dtype=np.float64) for p in planes]
-        # query bucket codes + norms: the same left-fold chains as
-        # _bucket_sql / norm(), driver-side.
-        code_q = np.zeros(nq, dtype=np.int64)
-        for bit, p in enumerate(plane_arrs):
-            acc = np.zeros(nq)
-            for i in range(dim):
-                acc += qm[:, i] * p[i]
-            code_q |= (acc >= 0.0).astype(np.int64) << bit
-        qn = np.zeros(nq)
-        for i in range(dim):
-            qn += qm[:, i] * qm[:, i]
-        qn = np.sqrt(qn)
+
+        def codes(m):  # _bucket_sql's left-fold sign chain
+            code = np.zeros(len(m), dtype=np.int64)
+            for bit, p in enumerate(plane_arrs):
+                acc = np.zeros(len(m))
+                for i in range(m.shape[1]):
+                    acc += m[:, i] * p[i]
+                code |= (acc >= 0.0).astype(np.int64) << bit
+            return code
+
         # probed-bucket → query-index lists. Distinct masks give a
         # query distinct probe codes, and a corpus row holds ONE
         # code, so every (query, corpus) pair arises at most once —
         # identical to the exploded-probe equi-join's semantics.
+        code_q = codes(qm)
         qidx_by_code: dict = {}
         for m in masks:
-            for qx in range(nq):
+            for qx in range(len(q_ids)):
                 qidx_by_code.setdefault(int(code_q[qx]) ^ m, []).append(qx)
         qidx_by_code = {
             c: np.asarray(v, dtype=np.int64)
             for c, v in qidx_by_code.items()
         }
-
-        def fused(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                cm = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-                nb = len(c_ids)
-                code_c = np.zeros(nb, dtype=np.int64)
-                for bit, p in enumerate(plane_arrs):
-                    acc = np.zeros(nb)
-                    for i in range(dim):
-                        acc += cm[:, i] * p[i]
-                    code_c |= (acc >= 0.0).astype(np.int64) << bit
-                cn = np.zeros(nb)
-                for i in range(dim):
-                    cn += cm[:, i] * cm[:, i]
-                cn = np.sqrt(cn)
-                out = {"query_id": [], "corpus_id": [], "cosine": []}
-                for code in np.unique(code_c):
-                    qi = qidx_by_code.get(int(code))
-                    if qi is None:
-                        continue
-                    ci = np.flatnonzero(code_c == code)
-                    sub = cm[ci]
-                    acc = np.zeros((len(ci), len(qi)))
-                    for i in range(dim):
-                        acc += sub[:, i][:, None] * qm[qi, i][None, :]
-                    cos = acc / (cn[ci][:, None] * qn[qi][None, :])
-                    cos = (np.sign(cos)
-                           * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6)
-                    cos[c_ids[ci][:, None] == q_ids[qi][None, :]] = -np.inf
-                    sub_ids = c_ids[ci]
-                    kk = min(k, len(ci))
-                    for j in range(len(qi)):
-                        col = cos[:, j]
-                        order = np.lexsort((sub_ids, -col))[:kk]
-                        keep = order[np.isfinite(col[order])]
-                        out["query_id"].extend([q_ids[qi[j]]] * len(keep))
-                        out["corpus_id"].extend(sub_ids[keep])
-                        out["cosine"].extend(col[keep])
-                yield pd.DataFrame(out)
-
-        scored = (
+        return (
             corpus.where(F.col(vec_col).isNotNull())
             .select(id_col, vec_col)
             .mapInPandas(
-                fused, schema="query_id long, corpus_id long, cosine double"
+                _block_scan(codes, qidx_by_code, q_ids, qm, k,
+                            id_col, vec_col),
+                schema=_SCORED_SCHEMA,
             )
         )
+
+    def join_tier(q_ids, qm):
+        cb = hyperplane_buckets(
+            corpus, planes, id_col, vec_col
+        ).withColumnsRenamed({id_col: "corpus_id", vec_col: "cvec"})
+        if query_pred is not None:
+            # The query set is a slice of the corpus: reuse the bucket
+            # projection instead of analyzing a second copy of the
+            # plane-literal expression (saves one giant plan on the
+            # driver AND lets the filter push to the same scan).
+            # Cached: the corpus side and the broadcast query side
+            # both read it — without the cache the plane dot products
+            # run twice.
+            cb = cb.cache()
+            qb = cb.withColumnsRenamed(
+                {"corpus_id": "query_id", "cvec": "qvec"}
+            ).where(query_pred(F.col("query_id")))
+        else:
+            qb = hyperplane_buckets(
+                queries, planes, id_col, vec_col
+            ).withColumnsRenamed({id_col: "query_id", vec_col: "qvec"})
+        if probe_hamming > 0:
+            probes = [F.col("bucket")] + [
+                F.col("bucket").bitwiseXOR(F.lit(m)) for m in masks[1:]
+            ]
+            qb = qb.withColumn("bucket", F.explode(F.array(*probes)))
+        cb = cb.withColumn("cn", norm(F.col("cvec")))
+        qb = qb.withColumn("qn", norm(F.col("qvec")))
+        sim = dot(F.col("qvec"), F.col("cvec")) / (F.col("qn") * F.col("cn"))
         return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "corpus_id", "cosine", "rank")
+            cb.join(F.broadcast(qb), "bucket")
+            .where(F.col("query_id") != F.col("corpus_id"))
+            .select("query_id", "corpus_id", round6(sim).alias("cosine"))
+            # Zero-norm vectors (0/0 → NaN cosine) are dropped exactly
+            # as the fused tier's isfinite keep-mask drops them (ADVICE
+            # round-9 rule: the tier probe never changes results).
+            .where(~F.isnan(F.col("cosine")))
         )
 
-    # ---- bucket-join tier ----
-    cb = hyperplane_buckets(corpus, planes, id_col, vec_col).withColumnsRenamed(
-        {id_col: "corpus_id", vec_col: "cvec"}
-    )
-    if query_pred is not None:
-        # The query set is a slice of the corpus: reuse the bucket
-        # projection instead of analyzing a second copy of the
-        # plane-literal expression (saves one giant plan on the
-        # driver AND lets the filter push to the same scan). Cached:
-        # the corpus side and the broadcast query side both read it —
-        # without the cache the plane dot products run twice.
-        cb = cb.cache()
-        qb = cb.withColumnsRenamed(
-            {"corpus_id": "query_id", "cvec": "qvec"}
-        ).where(query_pred(F.col("query_id")))
-    else:
-        qb = hyperplane_buckets(
-            queries, planes, id_col, vec_col
-        ).withColumnsRenamed({id_col: "query_id", vec_col: "qvec"})
-    if probe_hamming > 0:
-        probes = [F.col("bucket")] + [
-            F.col("bucket").bitwiseXOR(F.lit(m)) for m in masks[1:]
-        ]
-        qb = qb.withColumn("bucket", F.explode(F.array(*probes)))
-    cb = cb.withColumn("cn", norm(F.col("cvec")))
-    qb = qb.withColumn("qn", norm(F.col("qvec")))
-    sim = dot(F.col("qvec"), F.col("cvec")) / (F.col("qn") * F.col("cn"))
-    sim_r = round6(sim)
-    scored = (
-        cb.join(F.broadcast(qb), "bucket")
-        .where(F.col("query_id") != F.col("corpus_id"))
-        .select("query_id", "corpus_id", sim_r.alias("cosine"))
-        # Zero-norm vectors (0/0 → NaN cosine) are dropped exactly as
-        # the fused tier's isfinite keep-mask drops them (ADVICE
-        # round-9 rule: the tier probe never changes results).
-        .where(~F.isnan(F.col("cosine")))
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
+    return _ann_topk(
+        "lsh_cosine_topk", corpus, queries, query_pred, k, id_col,
+        vec_col, corpus_count_hint, fused_tier, join_tier,
     )
 
 
@@ -424,7 +335,7 @@ def ivf_assign(
 # budget the bucket join is the right plan — at warehouse scale the
 # corpus bucket table is written once as parquet BUCKETED BY
 # (table_no, bucket), so candidate generation is storage-pruned and
-# never rescans the corpus per query batch.
+# never rescans the corpus per query batch. Read at call time.
 FUSED_PAIR_BUDGET = 1_000_000_000
 
 # Hard cap on the driver-collected query matrix of the fused ANN
@@ -442,17 +353,154 @@ FUSED_PAIR_BUDGET = 1_000_000_000
 # contract spelled out rather than risking a driver OOM.
 ANN_QUERY_CAP = 131_072
 
+_SCORED_SCHEMA = "query_id long, corpus_id long, cosine double"
 
-def _collect_query_matrix(qdf, id_col: str, vec_col: str):
-    """Bounded driver collect of the ANN query side: returns
-    ``(rows, over_cap)`` where ``rows`` holds at most
-    ``ANN_QUERY_CAP`` rows (and ``over_cap`` means the real query
-    set is larger — the caller must route to a driver-free tier or
-    raise)."""
-    rows = qdf.select(id_col, vec_col).limit(ANN_QUERY_CAP + 1).collect()
-    if len(rows) > ANN_QUERY_CAP:
-        return rows[:ANN_QUERY_CAP], True
-    return rows, False
+
+def _ann_topk(
+    op: str,
+    corpus: DataFrame,
+    queries: DataFrame,
+    query_pred,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    corpus_count_hint: int | None,
+    fused_tier,
+    join_tier,
+    join_needs_matrix: bool = False,
+) -> DataFrame:
+    """The query side and tier probe the three ANN operators share
+    (the partition-local top-k shape of REPOSE): each operator
+    supplies its two tiers as ``tier(q_ids, qm) -> scored`` frames of
+    (query_id, corpus_id, cosine), and both exit through one rank
+    window.
+
+    The query set is ``query_pred``'s slice of the corpus, or
+    ``queries``, minus NULL vectors. Its matrix — the broadcast side,
+    bounded by contract — is collected through
+    ``limit(ANN_QUERY_CAP + 1)``, so the bound is ENFORCED: an
+    over-cap set takes the join tier, loudly (``qm`` is then None),
+    or raises when ``join_needs_matrix`` says the operator has no
+    driver-free tier. An empty set is a valid empty result. Otherwise
+    the tier follows the ``FUSED_PAIR_BUDGET`` economics, with the
+    corpus size from ``corpus_count_hint`` (catalog stats) when
+    given, else an id-only early-stopping count bounded by
+    budget/|Q| that never reads the vectors.
+    """
+    import numpy as np
+
+    qdf = (
+        corpus.where(query_pred(F.col(id_col)))
+        if query_pred is not None
+        else queries
+    )
+    qrows = (
+        qdf.where(F.col(vec_col).isNotNull())
+        .select(id_col, vec_col)
+        .limit(ANN_QUERY_CAP + 1)
+        .collect()
+    )
+    if not qrows:
+        return corpus.sparkSession.createDataFrame(
+            [], "query_id long, corpus_id long, cosine double, rank int"
+        )
+    if len(qrows) > ANN_QUERY_CAP:
+        if join_needs_matrix:
+            raise ValueError(
+                f"{op}: query set exceeds ANN_QUERY_CAP={ANN_QUERY_CAP} "
+                "rows; both of its tiers score against the driver-held "
+                "query matrix — slice the query batch, or use "
+                "lsh_cosine_topk whose bucket-join tier scales with an "
+                "unbounded query table"
+            )
+        import warnings
+
+        warnings.warn(
+            f"{op}: query set exceeds ANN_QUERY_CAP={ANN_QUERY_CAP}; "
+            "falling back to the join tier (the fused tier requires a "
+            "driver-bounded query matrix)",
+            stacklevel=3,
+        )
+        return _topk_window(join_tier(None, None), k)
+    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
+    qm = np.array([list(r[1]) for r in qrows], dtype=np.float64)
+    nq = len(q_ids)
+    n_corpus = corpus_count_hint
+    if n_corpus is None:
+        cap = max(FUSED_PAIR_BUDGET // nq, 1)
+        n_corpus = corpus.select(id_col).limit(cap + 1).count()
+    tier = fused_tier if n_corpus * nq <= FUSED_PAIR_BUDGET else join_tier
+    return _topk_window(tier(q_ids, qm), k)
+
+
+def _topk_window(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of scored rows; ties on the rounded cosine
+    break on corpus id, so every tier ranks identically."""
+    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "corpus_id", "cosine", "rank")
+    )
+
+
+def _block_scan(block_of, qidx_by_block, q_ids, qm, k, id_col, vec_col):
+    """Fused-tier kernel of the bucket/cell ANN operators, a
+    ``mapInPandas`` generator over (id, vector) batches:
+    ``block_of(cm)`` gives each corpus row its block (LSH bucket code,
+    IVF cell) and each block is scored against the queries probing it
+    (``qidx_by_block``), emitting per-query top-k. Cosines fold over
+    the dimension like ``dot()``/``norm()`` and round like
+    ``round6``; self-pairs and zero-norm (non-finite) cosines drop.
+    Everything the generator calls is nested, so it ships to the
+    Python workers by value."""
+    import numpy as np
+    import pandas as pd
+
+    def norms(m):  # norm()'s left-to-right sum of squares
+        acc = np.zeros(len(m))
+        for i in range(m.shape[1]):
+            acc += m[:, i] * m[:, i]
+        return np.sqrt(acc)
+
+    qn = norms(qm)
+
+    def fused(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            cm = np.stack(
+                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+            )
+            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
+            block = block_of(cm)
+            cn = norms(cm)
+            out = {"query_id": [], "corpus_id": [], "cosine": []}
+            for b in np.unique(block):
+                qi = qidx_by_block.get(int(b))
+                if qi is None:
+                    continue
+                ci = np.flatnonzero(block == b)
+                sub = cm[ci]
+                acc = np.zeros((len(ci), len(qi)))
+                for i in range(cm.shape[1]):
+                    acc += sub[:, i][:, None] * qm[qi, i][None, :]
+                cos = acc / (cn[ci][:, None] * qn[qi][None, :])
+                cos = (np.sign(cos)
+                       * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6)
+                cos[c_ids[ci][:, None] == q_ids[qi][None, :]] = -np.inf
+                sub_ids = c_ids[ci]
+                kk = min(k, len(ci))
+                for j in range(len(qi)):
+                    col = cos[:, j]
+                    order = np.lexsort((sub_ids, -col))[:kk]
+                    keep = order[np.isfinite(col[order])]
+                    out["query_id"].extend([q_ids[qi[j]]] * len(keep))
+                    out["corpus_id"].extend(sub_ids[keep])
+                    out["cosine"].extend(col[keep])
+            yield pd.DataFrame(out)
+
+    return fused
 
 
 def ivf_partial_moments(
@@ -525,14 +573,14 @@ def ivf_cosine_topk(
     vec_col: str = "embedding",
     query_pred=None,
     corpus_count_hint: int | None = None,
-    fused_pair_budget: int = FUSED_PAIR_BUDGET,
 ) -> DataFrame:
     """IVF approximate cosine top-k: corpus vectors live in their
     argmax-centroid cell; each query probes its ``nprobe`` best
     cells. Exact cosine re-ranks the candidates.
 
     Adaptive two-tier (round 10 — the multitable-LSH fused-scan
-    economics applied to IVF; see ``FUSED_PAIR_BUDGET``):
+    economics applied to IVF; see ``FUSED_PAIR_BUDGET`` and
+    ``_ann_topk``):
 
     * **Fused cell-scan tier** (|Q|·|C| within budget): the probed
       cells of every (bounded, driver-collected) query are a
@@ -556,176 +604,95 @@ def ivf_cosine_topk(
     degenerate input (the ADVICE round-9 rule).
     """
     import numpy as np
-    import pandas as pd
 
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
     n_cells = len(centroids)
 
-    if query_pred is not None:
-        qdf = corpus.where(query_pred(F.col(id_col)))
-    else:
-        qdf = queries
-    qdf = qdf.where(F.col(vec_col).isNotNull())
-
-    # Bounded query matrix — the broadcast side, with the contract
-    # ENFORCED exactly as in lsh_cosine_topk: capped collect, loud
-    # join-tier fallback past ANN_QUERY_CAP.
-    qrows, over_cap = _collect_query_matrix(qdf, id_col, vec_col)
-    if not qrows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, corpus_id long, cosine double, rank int"
-        )
-    if over_cap:
-        import warnings
-
-        warnings.warn(
-            f"ivf_cosine_topk: query set exceeds ANN_QUERY_CAP="
-            f"{ANN_QUERY_CAP}; falling back to the cell-join tier "
-            "(the fused tier requires a driver-bounded query matrix)",
-            stacklevel=2,
-        )
-    else:
-        q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-        qm = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-        nq, dim = qm.shape
-
-        # ---- tier probe (FUSED_PAIR_BUDGET economics) ----
-        n_corpus = corpus_count_hint
-        if n_corpus is None:
-            cap = max(fused_pair_budget // nq, 1)
-            n_corpus = corpus.select(id_col).limit(cap + 1).count()
-        over_cap = n_corpus * nq > fused_pair_budget
-    if not over_cap:
+    def fused_tier(q_ids, qm):
         C = np.asarray(centroids, dtype=np.float64)  # (n_cells, dim)
-        # query-side centroid scores + norms: the same left-fold
-        # chains as _dot_plane_sql / norm(), driver-side.
-        qs_mat = np.zeros((nq, n_cells))
-        for d in range(dim):
-            qs_mat += qm[:, d:d + 1] * C[:, d]
-        qn = np.zeros(nq)
-        for d in range(dim):
-            qn += qm[:, d] * qm[:, d]
-        qn = np.sqrt(qn)
+
+        def scores(m):  # _dot_plane_sql's left fold, per centroid
+            s = np.zeros((len(m), n_cells))
+            for d in range(m.shape[1]):
+                s += m[:, d:d + 1] * C[:, d]
+            return s
+
         # probe cells: ORDER BY score DESC, cell ASC — a stable
         # ascending argsort of -score keeps cell order on ties.
-        probes = np.argsort(-qs_mat, axis=1, kind="stable")[:, :nprobe]
-        qidx_by_cell = [
-            np.flatnonzero((probes == c).any(axis=1))
-            for c in range(n_cells)
+        probes = np.argsort(-scores(qm), axis=1, kind="stable")[:, :nprobe]
+        hits = [
+            np.flatnonzero((probes == c).any(axis=1)) for c in range(n_cells)
         ]
-
-        def fused(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                cm = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-                nb = len(c_ids)
-                s = np.zeros((nb, n_cells))
-                for d in range(dim):
-                    s += cm[:, d:d + 1] * C[:, d]
-                cell = np.argmax(s, axis=1)  # first max wins
-                cn = np.zeros(nb)
-                for d in range(dim):
-                    cn += cm[:, d] * cm[:, d]
-                cn = np.sqrt(cn)
-                out = {"query_id": [], "corpus_id": [], "cosine": []}
-                for c in np.unique(cell):
-                    qi = qidx_by_cell[c]
-                    if not len(qi):
-                        continue
-                    ci = np.flatnonzero(cell == c)
-                    sub = cm[ci]
-                    acc = np.zeros((len(ci), len(qi)))
-                    for d in range(dim):
-                        acc += sub[:, d][:, None] * qm[qi, d][None, :]
-                    cos = acc / (cn[ci][:, None] * qn[qi][None, :])
-                    cos = (np.sign(cos)
-                           * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6)
-                    cos[c_ids[ci][:, None] == q_ids[qi][None, :]] = -np.inf
-                    sub_ids = c_ids[ci]
-                    kk = min(k, len(ci))
-                    for j in range(len(qi)):
-                        col = cos[:, j]
-                        order = np.lexsort((sub_ids, -col))[:kk]
-                        keep = order[np.isfinite(col[order])]
-                        out["query_id"].extend([q_ids[qi[j]]] * len(keep))
-                        out["corpus_id"].extend(sub_ids[keep])
-                        out["cosine"].extend(col[keep])
-                yield pd.DataFrame(out)
-
-        scored = (
+        qidx_by_cell = {c: qi for c, qi in enumerate(hits) if len(qi)}
+        return (
             corpus.where(F.col(vec_col).isNotNull())
             .select(id_col, vec_col)
             .mapInPandas(
-                fused, schema="query_id long, corpus_id long, cosine double"
+                _block_scan(
+                    # first max wins, like ivf_assign's array_position
+                    lambda cm: np.argmax(scores(cm), axis=1),
+                    qidx_by_cell, q_ids, qm, k, id_col, vec_col,
+                ),
+                schema=_SCORED_SCHEMA,
             )
         )
+
+    def join_tier(q_ids, qm):
+        assigned = ivf_assign(corpus, centroids, id_col, vec_col)
+        if query_pred is not None:
+            # corpus-side cells AND the query slice read `assigned`;
+            # cache so the centroid-score array computes once.
+            assigned = assigned.cache()
+        cb = assigned.select(
+            F.col(id_col).alias("corpus_id"),
+            F.col(vec_col).alias("cvec"),
+            norm(F.col(vec_col)).alias("cn"),
+            "cell",
+        )
+        # query_pred: the query batch is a slice of the corpus — reuse
+        # the centroid-score projection rather than analyzing it twice.
+        qs = (
+            assigned.where(query_pred(F.col(id_col)))
+            if query_pred is not None
+            else ivf_assign(queries, centroids, id_col, vec_col)
+        )
+        # Probe-cell selection as a pure array expression (sort the
+        # (score, cell) structs with an ORDER BY cell_score DESC, cell
+        # ASC comparator, keep the first nprobe): map-side only. The
+        # posexplode + row_number spelling this replaces shuffled the
+        # exploded probe rows into a per-query window — a whole extra
+        # exchange + window stage for a ≤ n_centroids-element ranking
+        # that fits in one array.
+        probe_cells = F.expr(
+            f"transform(slice(array_sort("
+            f"zip_with(cell_scores, sequence(0, {n_cells - 1}), "
+            f"(s, c) -> struct(s AS s, c AS c)), "
+            f"(x, y) -> CASE WHEN x.s > y.s THEN -1 WHEN x.s < y.s THEN 1 "
+            f"WHEN x.c < y.c THEN -1 WHEN x.c > y.c THEN 1 ELSE 0 END), "
+            f"1, {nprobe}), x -> x.c)"
+        )
+        qb = qs.select(
+            F.col(id_col).alias("query_id"),
+            F.col(vec_col).alias("qvec"),
+            norm(F.col(vec_col)).alias("qn"),
+            F.explode(probe_cells).alias("cell"),
+        )
+        sim = dot(F.col("qvec"), F.col("cvec")) / (F.col("qn") * F.col("cn"))
         return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "corpus_id", "cosine", "rank")
+            cb.join(F.broadcast(qb), "cell")
+            .where(F.col("query_id") != F.col("corpus_id"))
+            .select("query_id", "corpus_id", round6(sim).alias("cosine"))
+            # a corpus vector sits in exactly one cell, so (query,
+            # corpus) pairs are already distinct — no dedup shuffle
+            # needed. Zero-norm vectors (0/0 → NaN cosine) are dropped
+            # exactly as the fused tier's isfinite keep-mask drops
+            # them (ADVICE round-9 rule: the tier probe never changes
+            # results).
+            .where(~F.isnan(F.col("cosine")))
         )
 
-    # ---- cell-join tier ----
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-    if query_pred is not None:
-        # corpus-side cells AND the query slice read `assigned`;
-        # cache so the centroid-score array computes once.
-        assigned = assigned.cache()
-    cb = assigned.select(
-        F.col(id_col).alias("corpus_id"),
-        F.col(vec_col).alias("cvec"),
-        norm(F.col(vec_col)).alias("cn"),
-        "cell",
-    )
-    # query_pred: the query batch is a slice of the corpus — reuse
-    # the centroid-score projection rather than analyzing it twice.
-    qs = (
-        assigned.where(query_pred(F.col(id_col)))
-        if query_pred is not None
-        else ivf_assign(queries, centroids, id_col, vec_col)
-    )
-    # Probe-cell selection as a pure array expression (sort the
-    # (score, cell) structs with an ORDER BY cell_score DESC, cell
-    # ASC comparator, keep the first nprobe): map-side only. The
-    # posexplode + row_number spelling this replaces shuffled the
-    # exploded probe rows into a per-query window — a whole extra
-    # exchange + window stage for a ≤ n_centroids-element ranking
-    # that fits in one array.
-    probe_cells = F.expr(
-        f"transform(slice(array_sort("
-        f"zip_with(cell_scores, sequence(0, {n_cells - 1}), "
-        f"(s, c) -> struct(s AS s, c AS c)), "
-        f"(x, y) -> CASE WHEN x.s > y.s THEN -1 WHEN x.s < y.s THEN 1 "
-        f"WHEN x.c < y.c THEN -1 WHEN x.c > y.c THEN 1 ELSE 0 END), "
-        f"1, {nprobe}), x -> x.c)"
-    )
-    qb = qs.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        norm(F.col(vec_col)).alias("qn"),
-        F.explode(probe_cells).alias("cell"),
-    )
-    sim = dot(F.col("qvec"), F.col("cvec")) / (F.col("qn") * F.col("cn"))
-    sim_r = round6(sim)
-    scored = (
-        cb.join(F.broadcast(qb), "cell")
-        .where(F.col("query_id") != F.col("corpus_id"))
-        .select("query_id", "corpus_id", sim_r.alias("cosine"))
-        # a corpus vector sits in exactly one cell, so (query, corpus)
-        # pairs are already distinct — no dedup shuffle needed.
-        # Zero-norm vectors (0/0 → NaN cosine) are dropped exactly as
-        # the fused tier's isfinite keep-mask drops them (ADVICE
-        # round-9 rule: the tier probe never changes results).
-        .where(~F.isnan(F.col("cosine")))
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
+    return _ann_topk(
+        "ivf_cosine_topk", corpus, queries, query_pred, k, id_col,
+        vec_col, corpus_count_hint, fused_tier, join_tier,
     )
 
 
@@ -790,7 +757,6 @@ def lsh_cosine_topk_multitable(
     vec_col: str = "embedding",
     query_pred=None,
     corpus_count_hint: int | None = None,
-    fused_pair_budget: int = FUSED_PAIR_BUDGET,
 ) -> DataFrame:
     """Multi-table LSH: L independent hyperplane tables; a candidate
     pair needs to collide in ANY table. The standard recall lever
@@ -815,10 +781,10 @@ def lsh_cosine_topk_multitable(
       once as parquet bucketed by (table_no, bucket) and candidate
       generation is storage-pruned.
 
-    The tier probe uses ``corpus_count_hint`` (catalog stats) when
-    given; otherwise an id-only early-stopping count bounded by
-    budget/|Q|. Scoring never ships vectors per pair in either tier:
-    the corpus vector crosses the Arrow boundary ONCE and the
+    The query side and tier probe are ``_ann_topk``'s; since both
+    tiers score against the driver-held query matrix, an over-cap
+    query set raises. Scoring never ships vectors per pair in either
+    tier: the corpus vector crosses the Arrow boundary ONCE and the
     bounded query matrix is broadcast — the same dimension-ordered
     accumulation as ``dot()``'s fold, so cosines stay bit-identical
     to the expression spelling and the oracle.
@@ -826,79 +792,35 @@ def lsh_cosine_topk_multitable(
     import numpy as np
     import pandas as pd
 
-    if query_pred is not None:
-        qdf = corpus.where(query_pred(F.col(id_col)))
-    else:
-        qdf = queries
-    # the driver-side query matrix must hold only real vectors
-    qdf = qdf.where(F.col(vec_col).isNotNull())
-
-    # Bounded query matrix — the broadcast side by contract. It is
-    # collected ANYWAY for the scoring kernel, so the query-side
-    # bucket rows are computed here on the driver with the SAME
-    # Arrow kernel (multitable_bucket_pass — identical fold order,
-    # identical buckets) instead of a second Spark branch; the old
-    # spelling cached the corpus bucket table just so the query
-    # slice could reuse it, paying a cache materialization plus an
-    # extra broadcast-build job every run.
-    qrows, over_cap = _collect_query_matrix(qdf, id_col, vec_col)
-    if over_cap:
-        # BOTH tiers of this operator score against the driver-held
-        # query matrix, so there is no driver-free fallback: fail
-        # loudly (bounded fetch above — the driver never held more
-        # than cap+1 rows) instead of building an unbounded matrix.
-        raise ValueError(
-            "lsh_cosine_topk_multitable: query set exceeds "
-            f"ANN_QUERY_CAP={ANN_QUERY_CAP} rows; the multitable "
-            "operator requires a broadcast-bounded query side — "
-            "slice the query batch, or use lsh_cosine_topk whose "
-            "bucket-join tier scales with an unbounded query table"
-        )
-    if not qrows:
-        # empty query set: a valid empty result, not a crash
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, corpus_id long, cosine double, rank int"
-        )
-    qgen, _ = multitable_bucket_pass(
-        tables, id_col=id_col, vec_col=vec_col, out_id="query_id"
-    )
-    qb_pdf = pd.concat(
-        list(
-            qgen(
-                [
-                    pd.DataFrame(
-                        {
-                            id_col: [r[0] for r in qrows],
-                            vec_col: [list(r[1]) for r in qrows],
-                        }
-                    )
-                ]
-            )
-        )
-    )
-
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qm = np.array([r[1] for r in qrows], dtype=np.float64)
-    nq, dim = qm.shape
-    qn = np.zeros(nq)
-    for i in range(dim):  # sequential, matches norm()'s fold order
-        qn += qm[:, i] * qm[:, i]
-    qn = np.sqrt(qn)
     n_tables = len(tables)
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
 
-    # ---- tier probe (see FUSED_PAIR_BUDGET for the economics) ----
-    n_corpus = corpus_count_hint
-    if n_corpus is None:
-        cap = max(fused_pair_budget // nq, 1)
-        # id-only early-stopping count: reads at most cap+1 rows of
-        # one column, never the vectors.
-        n_corpus = corpus.select(id_col).limit(cap + 1).count()
-    if n_corpus * nq <= fused_pair_budget:
+    def query_side(q_ids, qm):
+        """Query norms (``norm()``'s fold order) and query bucket rows.
+        The query bucket rows are computed driver-side from the
+        collected matrix with the SAME Arrow kernel as the corpus
+        side (multitable_bucket_pass — identical fold order,
+        identical buckets) instead of a second Spark branch; the old
+        spelling cached the corpus bucket table just so the query
+        slice could reuse it, paying a cache materialization plus an
+        extra broadcast-build job every run."""
+        qn = np.zeros(len(qm))
+        for i in range(qm.shape[1]):  # sequential, matches norm()
+            qn += qm[:, i] * qm[:, i]
+        qgen, _ = multitable_bucket_pass(
+            tables, id_col=id_col, vec_col=vec_col, out_id="query_id"
+        )
+        qb_pdf = pd.concat(
+            list(qgen([pd.DataFrame({id_col: q_ids, vec_col: list(qm)})]))
+        )
+        return np.sqrt(qn), qb_pdf
+
+    def fused_tier(q_ids, qm):
+        qn, qb_pdf = query_side(q_ids, qm)
+        nq, dim = qm.shape
         # Fused collision-scan tier. Query codes come out of the
         # kernel table-major for a single input batch
         # (ids tiled per table), so a reshape recovers (nq, L) in
-        # qrows order.
+        # query order.
         qcodes = qb_pdf["bucket"].to_numpy(np.int32).reshape(n_tables, nq).T
         plane_mats = [
             [np.asarray(p, dtype=np.float64) for p in planes]
@@ -949,112 +871,106 @@ def lsh_cosine_topk_multitable(
                     out["cosine"].extend(col[keep])
                 yield pd.DataFrame(out)
 
-        scored = corpus.where(F.col(vec_col).isNotNull()).mapInPandas(
-            fused, schema="query_id long, corpus_id long, cosine double"
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "corpus_id", "cosine", "rank")
+        return corpus.where(F.col(vec_col).isNotNull()).mapInPandas(
+            fused, schema=_SCORED_SCHEMA
         )
 
-    # ---- bucket-join tier ----
-    def bucketed(df: DataFrame, out_id: str) -> DataFrame:
+    def join_tier(q_ids, qm):
+        qn, qb_pdf = query_side(q_ids, qm)
+        dim = qm.shape[1]
+
         # One Arrow pass over one scan (multitable_bucket_pass): the
         # vectors cross into Python once and only id-sized
-        # (id, table_no, bucket) rows come back — nothing
-        # vector-sized returns to the JVM. (The expression spelling
-        # costs L×b interpreted folds per vector: 3.9 s for 8×3
-        # planes over 20k vectors at sf1, vs vectorized
-        # microseconds.)
+        # (id, table_no, bucket) rows come back — nothing vector-sized
+        # returns to the JVM. (The expression spelling costs L×b
+        # interpreted folds per vector: 3.9 s for 8×3 planes over 20k
+        # vectors at sf1, vs vectorized microseconds.) NULL vectors
+        # never cross the Arrow boundary.
         gen, schema = multitable_bucket_pass(
-            tables, id_col=id_col, vec_col=vec_col, out_id=out_id
+            tables, id_col=id_col, vec_col=vec_col, out_id="corpus_id"
         )
-        # NULL vectors never cross the Arrow boundary
-        return df.where(F.col(vec_col).isNotNull()).mapInPandas(
+        cb = corpus.where(F.col(vec_col).isNotNull()).mapInPandas(
             gen, schema=schema
         )
+        qb = corpus.sparkSession.createDataFrame(
+            qb_pdf, schema="query_id long, table_no int, bucket int"
+        )
+        # collect_set fuses pair-dedup into the per-corpus grouping:
+        # one shuffle on corpus_id with map-side partial sets, instead
+        # of dropDuplicates' extra exchange on the pair key followed
+        # by a second shuffle for collect_list. Set order is
+        # irrelevant — every (query, corpus) pair scores
+        # independently downstream.
+        per_corpus = (
+            cb.join(F.broadcast(qb), ["table_no", "bucket"])
+            .where(F.col("query_id") != F.col("corpus_id"))
+            .groupBy("corpus_id")
+            .agg(F.collect_set("query_id").alias("qids"))
+        )
+        corpus_vecs = corpus.select(
+            F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("cvec")
+        )
+        withvec = per_corpus.join(corpus_vecs, "corpus_id")
 
-    cb = bucketed(corpus, "corpus_id")
-    qb = corpus.sparkSession.createDataFrame(
-        qb_pdf, schema="query_id long, table_no int, bucket int"
-    )
-    # collect_set fuses pair-dedup into the per-corpus grouping:
-    # one shuffle on corpus_id with map-side partial sets, instead
-    # of dropDuplicates' extra exchange on the pair key followed by
-    # a second shuffle for collect_list. Set order is irrelevant —
-    # every (query, corpus) pair scores independently downstream.
-    per_corpus = (
-        cb.join(F.broadcast(qb), ["table_no", "bucket"])
-        .where(F.col("query_id") != F.col("corpus_id"))
-        .groupBy("corpus_id")
-        .agg(F.collect_set("query_id").alias("qids"))
-    )
-    corpus_vecs = corpus.select(
-        F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("cvec")
-    )
-    withvec = per_corpus.join(corpus_vecs, "corpus_id")
+        # Sorted-id lookup for candidate query ids: searchsorted maps
+        # the whole batch's id lists in two vectorized passes. (The
+        # dict comprehension it replaces walked every candidate pair
+        # in the Python interpreter — measured as the DOMINANT cost of
+        # this tier at the sf10 ladder: ~260M pairs through a
+        # per-element dict lookup.)
+        q_sorter = np.argsort(q_ids)
+        q_sorted = q_ids[q_sorter]
 
-    # Sorted-id lookup for candidate query ids: searchsorted maps the
-    # whole batch's id lists in two vectorized passes. (The dict
-    # comprehension it replaces walked every candidate pair in the
-    # Python interpreter — measured as the DOMINANT cost of this tier
-    # at the sf10 ladder: ~260M pairs through a per-element dict
-    # lookup.)
-    q_sorter = np.argsort(q_ids)
-    q_sorted = q_ids[q_sorter]
+        def score(batches):
+            for pdf in batches:
+                if not len(pdf):
+                    continue
+                cm = np.stack(
+                    [np.asarray(v, dtype=np.float64) for v in pdf["cvec"]]
+                )
+                cn = np.zeros(len(pdf))
+                for i in range(dim):
+                    cn += cm[:, i] * cm[:, i]
+                cn = np.sqrt(cn)
+                counts = pdf["qids"].map(len).to_numpy(dtype=np.int64)
+                if not counts.sum():
+                    continue
+                c_idx = np.repeat(np.arange(len(pdf)), counts)
+                all_q = np.concatenate(
+                    [np.asarray(lst, dtype=np.int64) for lst in pdf["qids"]]
+                )
+                q_idx = q_sorter[np.searchsorted(q_sorted, all_q)]
+                acc = np.zeros(len(c_idx))
+                for i in range(dim):
+                    acc += qm[q_idx, i] * cm[c_idx, i]
+                cos = acc / (qn[q_idx] * cn[c_idx])
+                # decimal(18,6) half-up rounding, same as the JVM/oracle
+                cos = np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6
+                # Zero-norm vectors (0/0 → NaN cosine) are dropped in
+                # BOTH tiers: the fused tier's isfinite keep-mask
+                # already excludes them, and without this mask Spark's
+                # descending sort would rank the NaN rows above every
+                # real cosine — the tier probe must only pick an
+                # implementation, never a result (ADVICE round 9).
+                fin = np.isfinite(cos)
+                if not fin.all():
+                    cos, q_idx, c_idx = cos[fin], q_idx[fin], c_idx[fin]
+                yield pd.DataFrame(
+                    {
+                        "query_id": q_ids[q_idx],
+                        "corpus_id": pdf["corpus_id"].to_numpy(
+                            dtype=np.int64
+                        )[c_idx],
+                        "cosine": cos,
+                    }
+                )
 
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["cvec"]]
-            )
-            cn = np.zeros(len(pdf))
-            for i in range(dim):
-                cn += cm[:, i] * cm[:, i]
-            cn = np.sqrt(cn)
-            counts = pdf["qids"].map(len).to_numpy(dtype=np.int64)
-            if not counts.sum():
-                continue
-            c_idx = np.repeat(np.arange(len(pdf)), counts)
-            all_q = np.concatenate(
-                [np.asarray(lst, dtype=np.int64) for lst in pdf["qids"]]
-            )
-            q_idx = q_sorter[np.searchsorted(q_sorted, all_q)]
-            acc = np.zeros(len(c_idx))
-            for i in range(dim):
-                acc += qm[q_idx, i] * cm[c_idx, i]
-            cos = acc / (qn[q_idx] * cn[c_idx])
-            # decimal(18,6) half-up rounding, same as the JVM/oracle
-            cos = np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6
-            # Zero-norm vectors (0/0 → NaN cosine) are dropped in
-            # BOTH tiers: the fused tier's isfinite keep-mask already
-            # excludes them, and without this mask Spark's descending
-            # sort would rank the NaN rows above every real cosine —
-            # the tier probe must only pick an implementation, never
-            # a result (ADVICE round 9).
-            fin = np.isfinite(cos)
-            if not fin.all():
-                cos, q_idx, c_idx = cos[fin], q_idx[fin], c_idx[fin]
-            yield pd.DataFrame(
-                {
-                    "query_id": q_ids[q_idx],
-                    "corpus_id": pdf["corpus_id"].to_numpy(
-                        dtype=np.int64
-                    )[c_idx],
-                    "cosine": cos,
-                }
-            )
+        return withvec.mapInPandas(score, schema=_SCORED_SCHEMA)
 
-    scored = withvec.mapInPandas(
-        score, schema="query_id long, corpus_id long, cosine double"
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
+    return _ann_topk(
+        "lsh_cosine_topk_multitable", corpus, queries, query_pred, k,
+        id_col, vec_col, corpus_count_hint, fused_tier, join_tier,
+        join_needs_matrix=True,
     )
 
 

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from metadata_wrangler_spark.catalog import load
+from metadata_wrangler_spark.catalog import load, table_stats
 from metadata_wrangler_spark.plans import register
 from metadata_wrangler_spark.plans.relational import dsum
 
@@ -2948,6 +2948,13 @@ def ev_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- inter-event-time percentiles: selection over arrival gaps -----------
 
+# Below this many bytes of event source the gap frame is NOT cached:
+# the cache build costs more than the second window run it saves
+# (honest A/B at sf0.1: cached 1.76 s vs uncached 1.52 s; sf10:
+# cached 3.05 vs uncached 3.41 — rows identical both ways). Unknown
+# sizes (remote storage) keep the cache — the at-scale-safe side.
+_GAP_CACHE_MIN_BYTES = 8 << 20
+
 
 @register(
     "ev_gap_percentiles",
@@ -3018,19 +3025,10 @@ def ev_gap_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gaps is a DERIVED frame (full per-user window) — the
     # cache_input case at scale: materialize once, let both
     # histogram rounds read the 2-column cache instead of re-running
-    # the window. SCALE-TIERED (round 11): under ~8 MB of event
-    # source the cache build costs more than the second window run
-    # it saves (honest A/B at sf0.1: cached 1.76 s vs uncached
-    # 1.52 s; sf10: cached 3.05 vs uncached 3.41 — rows identical
-    # both ways). Zero-job driver-side probe of the source file
-    # size; unknown sizes default to cached, the at-scale-safe side.
-    try:
-        import os as _os
-        _small = _os.path.getsize(
-            _os.path.join(sf_dir, "events.parquet")
-        ) < (8 << 20)
-    except OSError:
-        _small = False
+    # the window. SCALE-TIERED on the event source's size
+    # (_GAP_CACHE_MIN_BYTES).
+    st = table_stats(sf_dir, "events")
+    _small = st is not None and st.bytes < _GAP_CACHE_MIN_BYTES
     sel = grouped_select(
         gaps, "gap",
         lambda st: {

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from metadata_wrangler_spark.catalog import load
+from metadata_wrangler_spark.catalog import load, memo, table_rows, table_stats
 from metadata_wrangler_spark.operators.lineage import free_checkpoint
 from metadata_wrangler_spark.operators.closure import (
     bounded_shortest_paths,
@@ -346,6 +346,17 @@ def g_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Triangle counting (degree-ordered) -----------------------------------
 
+# Below this many bytes of edge source (customer.parquet) the
+# undirected-edge frame is NOT cached: the InMemoryRelation build
+# barrier costs more than exchange reuse saves (honest per-query A/B
+# at sf0.1: cached 2.57 s vs uncached 1.54 s, rows identical), while
+# at sf10 recomputing the distinct for both consumers loses (8.6 vs
+# 9.9 s). sf1, in between, ties (3.94/4.07/3.88 across cache-both /
+# no-cache / ord_e-only). Unknown sizes (remote storage) keep the
+# cache — the at-scale-safe side.
+_TRIANGLE_CACHE_MIN_BYTES = 1 << 20
+
+
 @register(
     "g_triangle_count",
     oracle=f"""
@@ -410,22 +421,10 @@ def g_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # und feeds deg AND both endpoint joins; ord_e feeds the two
     # wedge sides AND the closing probe. ord_e is always cached
     # (recomputing its two joins per branch never wins). und's cache
-    # is SCALE-TIERED (round 11): under ~1 MB of edge source the
-    # InMemoryRelation build barrier costs more than exchange reuse
-    # saves (honest per-query A/B at sf0.1: cached 2.57 s vs
-    # uncached 1.54 s, rows identical), while at sf10 recomputing
-    # the distinct for both consumers loses (8.6 vs 9.9 s) — so the
-    # cache follows a zero-job driver-side probe of the edge
-    # source's file size (sf1, in between, ties: 3.94/4.07/3.88
-    # across cache-both / no-cache / ord_e-only). Unknown sizes
-    # (remote storage) default to cached — the at-scale-safe side.
-    try:
-        import os as _os
-        _small = _os.path.getsize(
-            _os.path.join(sf_dir, "customer.parquet")
-        ) < (1 << 20)
-    except OSError:
-        _small = False
+    # is SCALE-TIERED on the edge source's size
+    # (_TRIANGLE_CACHE_MIN_BYTES).
+    st = table_stats(sf_dir, "customer")
+    _small = st is not None and st.bytes < _TRIANGLE_CACHE_MIN_BYTES
     und = (
         edges.where(F.col("src") != F.col("dst"))
         .select(
@@ -592,13 +591,13 @@ def g_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("node")
     )
     # Edge count is known BY CONSTRUCTION (2 out-edges per customer):
-    # one parquet-metadata count (~0.2 s warm at sf10) replaces the
+    # one parquet-footer lookup (no Spark job) replaces the
     # operator's CollectLimit probe, whose single-partition funnel
     # measured 2.3 s on the same graph — the same stats lookup a
     # cost-based optimizer would make.
     out = bounded_shortest_paths(
         one_hop, nodes, sources, hops=6,
-        edge_count_hint=2 * customer.count(),
+        edge_count_hint=2 * table_rows(spark, sf_dir, "customer"),
     )
     return out.select(
         "node",
@@ -948,50 +947,25 @@ def g_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bipartite projection: co-fulfillment supplier graph with lift
 # ---------------------------------------------------------------------------
 
-#: (applicationId, sf_dir) -> (basket, undirected pair counts,
-#: per-supplier counts, 1-row order count) — all persisted.
-#: g_bipartite_project and a_assoc_rules scan/dedup the SAME
-#: (l_orderkey, l_suppkey) projection, shuffle it on the same key,
-#: share the same pair-count numerator (confidence and lift differ
-#: only in denominators), AND both broadcast the same two
-#: denominators — in a bench batch or dashboard refresh that runs
-#: both, memoizing the four intermediates halves the heavy work.
-#: Every frame is counter-sized (distinct basket lines; distinct
-#: co-occurring pairs; one row per supplier; one scalar), so
-#: MEMORY_AND_DISK persistence is safe at any SF.
-_BASKET_CACHE: dict = {}
-
-
-def clear_basket_cache() -> None:
-    """Unpersist and drop every memoized basket frame. Bench/test
-    harnesses iterating sf ladders call this between scales."""
-    for frames in _BASKET_CACHE.values():
-        for df in frames:
-            try:
-                df.unpersist()
-            except Exception:  # session already stopped — nothing to free
-                pass
-    _BASKET_CACHE.clear()
-
-
 def _basket_and_pairs(spark: SparkSession, sf_dir: str):
+    """(basket, undirected pair counts, per-supplier counts, 1-row
+    order count) — all persisted, memoized per (session, sf_dir).
+    g_bipartite_project and a_assoc_rules scan/dedup the SAME
+    (l_orderkey, l_suppkey) projection, shuffle it on the same key,
+    share the same pair-count numerator (confidence and lift differ
+    only in denominators), AND both broadcast the same two
+    denominators — in a bench batch or dashboard refresh that runs
+    both, memoizing the four intermediates halves the heavy work.
+    Every frame is counter-sized (distinct basket lines; distinct
+    co-occurring pairs; one row per supplier; one scalar), so
+    MEMORY_AND_DISK persistence is safe at any SF."""
+    return memo(spark, sf_dir, "baskets",
+                lambda: _build_baskets(spark, sf_dir))
+
+
+def _build_baskets(spark: SparkSession, sf_dir: str):
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BASKET_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # One sf_dir's frames live per application: entering a new scale
-    # (bench ladders iterate sf0.001 -> sf1) evicts the old scale's
-    # persisted frames instead of accumulating MEMORY_AND_DISK
-    # storage for the life of the session (round-7 advice).
-    stale = [k for k in _BASKET_CACHE if k[0] == key[0] and k[1] != sf_dir]
-    for k in stale:
-        for df in _BASKET_CACHE.pop(k):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
     li = load(spark, sf_dir, "lineitem")
     # Partitioning: one explicit exchange on l_orderkey up front.
     # HashPartitioning(l_orderkey) satisfies the clustered
@@ -1031,8 +1005,7 @@ def _basket_and_pairs(spark: SparkSession, sf_dir: str):
         .agg(F.count(F.lit(1)).alias("n_orders"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _BASKET_CACHE[key] = (os_, pairs, sc, n)
-    return _BASKET_CACHE[key]
+    return os_, pairs, sc, n
 
 
 _LIFT_MIN_PPM = 1_100_000  # keep pairs with lift >= 1.1x independence

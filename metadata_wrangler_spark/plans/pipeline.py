@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from metadata_wrangler_spark.catalog import load
+from metadata_wrangler_spark.catalog import load, table_rows
 from metadata_wrangler_spark.operators import merge
 from metadata_wrangler_spark.plans import register
 from metadata_wrangler_spark.sources import http_cache, xmlsrc
@@ -673,7 +673,7 @@ def pipe_semantic_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = similarity.lsh_cosine_topk(
         emb, None, _PLANES, k=_SEARCH_POOL,
         query_pred=lambda c: c % 101 == 0,
-        corpus_count_hint=emb.count(),
+        corpus_count_hint=table_rows(spark, sf_dir, "embeddings"),
     ).join(
         emb.select(
             F.col("vec_id").alias("corpus_id"),

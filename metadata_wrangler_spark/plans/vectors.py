@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metadata_wrangler_spark.catalog import load
+from metadata_wrangler_spark.catalog import load, table_rows
 from metadata_wrangler_spark.operators import similarity
 from metadata_wrangler_spark.plans import register
 
@@ -46,7 +46,7 @@ def _past_pair_budget(emb) -> bool:
     at ANY corpus size — a full count() would scan the corpus just
     to pick a tier (measured as one extra ~0.3 s job per call at
     sf0.1, the extended-series floor class)."""
-    n_kernel = int((101 * _ANN_EXPR_PAIR_BUDGET) ** 0.5)  # ~31.8k
+    n_kernel = int((101 * _ANN_EXPR_PAIR_BUDGET) ** 0.5)  # 1740
     n_kernel = min(n_kernel, 2**31 - 1)  # limit() takes a Java int
     probed = emb.select("vec_id").limit(n_kernel).count()
     return probed >= n_kernel
@@ -171,7 +171,7 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.lsh_cosine_topk(
         emb, None, _PLANES, k=_K,
         query_pred=lambda c: c % 101 == 0,
-        corpus_count_hint=emb.count(),
+        corpus_count_hint=table_rows(spark, sf_dir, "embeddings"),
     )
 
 
@@ -231,7 +231,7 @@ def sim_lsh_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.lsh_cosine_topk(
         emb, None, _PLANES, k=_K, probe_hamming=1,
         query_pred=lambda c: c % 101 == 0,
-        corpus_count_hint=emb.count(),
+        corpus_count_hint=table_rows(spark, sf_dir, "embeddings"),
     )
 
 
@@ -308,11 +308,12 @@ def sim_lsh_multitable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (The query side deliberately does NOT reuse the corpus branch:
     # it would inherit this repartition and serialize behind it.)
     corpus = emb.repartition(spark.sparkContext.defaultParallelism)
-    # Vector count is a parquet-metadata lookup (~0.2 s warm at
-    # sf10) — the tier probe's stats input, same pattern as
-    # g_shortest_path's edge_count_hint.
+    # Vector count is a parquet-footer lookup (no Spark job) — the
+    # tier probe's stats input, same pattern as g_shortest_path's
+    # edge_count_hint.
     return similarity.lsh_cosine_topk_multitable(
-        corpus, queries, _TABLES, k=_K, corpus_count_hint=emb.count()
+        corpus, queries, _TABLES, k=_K,
+        corpus_count_hint=table_rows(spark, sf_dir, "embeddings"),
     )
 
 
@@ -389,12 +390,12 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = load(spark, sf_dir, "embeddings")
     corpus = emb.repartition(spark.sparkContext.defaultParallelism)
-    # Vector count is a parquet-metadata lookup — the tier probe's
-    # stats input, same pattern as sim_lsh_multitable_topk's hint.
+    # Vector count is a parquet-footer lookup (no Spark job) — the
+    # tier probe's stats input, same as sim_lsh_multitable_topk's.
     return similarity.ivf_cosine_topk(
         corpus, None, _CENTROIDS, k=_K, nprobe=_NPROBE,
         query_pred=lambda c: c % 101 == 0,
-        corpus_count_hint=emb.count(),
+        corpus_count_hint=table_rows(spark, sf_dir, "embeddings"),
     )
 
 
@@ -1455,7 +1456,7 @@ def sim_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     approx = similarity.lsh_cosine_topk(
         emb, None, _PLANES, k=_K, query_pred=lambda c: c % 101 == 0,
-        corpus_count_hint=emb.count(),
+        corpus_count_hint=table_rows(spark, sf_dir, "embeddings"),
     ).select("query_id", "corpus_id", F.col("rank").alias("a_rank"))
     return (
         exact.join(

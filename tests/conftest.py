@@ -29,3 +29,19 @@ def rows(df, *order_cols):
     """Collect to a sorted list of tuples for exact-row assertions."""
     out = [tuple(r) for r in df.collect()]
     return sorted(out)
+
+
+def build_jobs(spark, build) -> int:
+    """Number of Spark jobs ``build()`` starts, counted through a job
+    group once the listener bus has delivered every job event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -321,6 +321,20 @@ def test_token_jaccard_blocked_matches_join_spelling(spark):
     assert (1, 3) in got and got[(1, 2)] == 1.0 and (1, 4) not in got
 
 
+def test_token_jaccard_blocked_rejects_duplicate_keys(spark):
+    """The key column is a unique key: a key held by two rows of one
+    block would pair with itself, so the kernel raises naming the
+    contract instead of emitting an (x, x) pair."""
+    df = spark.createDataFrame(
+        [(1, "B1", "red green"), (1, "B1", "red blue"), (2, "B1", "red")],
+        "k bigint, blk string, txt string",
+    )
+    with pytest.raises(Exception, match="must be a unique key"):
+        dedup.token_jaccard_blocked(
+            df, "k", "blk", "txt", threshold=0.0
+        ).collect()
+
+
 def test_shingle_table_kernel_matches_jvm_spelling(spark):
     """The Arrow shingle pass must reproduce the JVM spelling's
     (id, n_sh) rows and 64-bit equality classes: same doc set (NULL/

@@ -315,7 +315,7 @@ def test_decay_halflife_is_single_pass(spark, queries):
     assert len(keys) == 1 and next(iter(keys)).startswith("user_id")
 
 
-def test_shortest_path_doubling_shape(spark):
+def test_shortest_path_doubling_shape(spark, monkeypatch):
     """The DISTRIBUTED tier of bounded_shortest_paths (min-plus
     doubling — the past-budget path; round 9 routes small graphs
     through the numpy local tier, so force the distributed tier
@@ -324,6 +324,7 @@ def test_shortest_path_doubling_shape(spark):
     per-composition min must have a map-side partial phase, and the
     plan must not exceed the 3 hash exchanges of the documented
     design (one per min aggregate)."""
+    from metadata_wrangler_spark.operators import closure
     from metadata_wrangler_spark.operators.closure import (
         bounded_shortest_paths,
     )
@@ -342,10 +343,9 @@ def test_shortest_path_doubling_shape(spark):
         F.col("c_custkey").alias("node")
     )
     sources = nodes.where(F.col("node") == 1)
+    monkeypatch.setattr(closure, "LOCAL_SOLVE_MAX_EDGES", 0)
     plan = explain_str(
-        bounded_shortest_paths(
-            one_hop, nodes, sources, hops=6, local_solve_max_edges=0
-        )
+        bounded_shortest_paths(one_hop, nodes, sources, hops=6)
     )
     assert plan.count("BroadcastHashJoin") >= 2  # two extensions
     assert "CartesianProduct" not in plan
@@ -356,6 +356,7 @@ def test_basket_memo_is_reused_and_cached(spark):
     """g_bipartite_project and a_assoc_rules must read the SAME
     persisted basket/pair intermediates (InMemoryTableScan in both
     plans; cache objects identical across the two calls)."""
+    from metadata_wrangler_spark.catalog import _MEMO
     from metadata_wrangler_spark.plans import graph as G
 
     d1 = G.g_bipartite_project(spark, SF)
@@ -363,8 +364,7 @@ def test_basket_memo_is_reused_and_cached(spark):
     p1, p2 = explain_str(d1), explain_str(d2)
     assert "InMemoryTableScan" in p1
     assert "InMemoryTableScan" in p2
-    key = (spark.sparkContext.applicationId, SF)
-    assert key in G._BASKET_CACHE
+    assert (SF, "baskets") in _MEMO[spark]
     os_a, pairs_a, sc_a, n_a = G._basket_and_pairs(spark, SF)
     os_b, pairs_b, sc_b, n_b = G._basket_and_pairs(spark, SF)
     assert os_a is os_b and pairs_a is pairs_b  # memo hit, not rebuild
@@ -438,3 +438,30 @@ def test_ngram_novelty_has_no_join_back(spark, queries):
     # shingle key appears once (the first-occurrence aggregate),
     # id for the counter aggregates/join — nothing else
     assert keys <= {"s", "id"}, keys
+
+
+# Build-time Spark jobs of each plan whose tier hint or cutoff is a
+# table row count, at sf0.001. The count comes from parquet footers
+# (catalog.table_stats), so each ceiling is one job below the count
+# the same build took when a count() fed the hint (measured 2 below
+# it: under AQE a count() is a map-stage job plus a result job).
+STATS_FED_BUILD_JOBS = {
+    "sim_lsh_topk": 3,
+    "sim_lsh_probe_topk": 3,
+    "sim_lsh_multitable_topk": 3,
+    "sim_ivf_topk": 3,
+    "sim_recall_eval": 4,
+    "pipe_semantic_search": 3,
+    "g_shortest_path": 6,
+    "dd_ngram_jaccard_pruned": 1,
+}
+
+
+@pytest.mark.parametrize("name", sorted(STATS_FED_BUILD_JOBS))
+def test_stats_fed_build_job_ceiling(spark, queries, name):
+    from metadata_wrangler_spark.plans import release_session_caches
+    from tests.conftest import build_jobs
+
+    release_session_caches(spark)
+    jobs = build_jobs(spark, lambda: queries[name](spark, SF))
+    assert jobs <= STATS_FED_BUILD_JOBS[name], jobs

@@ -684,6 +684,7 @@ def test_release_session_caches_drops_all_persisted_frames(spark):
     baskets) survives and a fresh persist still works — the helper
     tools/bench_vs_oracle.py calls between queries so one query's
     pinned storage cannot distort a successor's wall."""
+    from metadata_wrangler_spark.catalog import _MEMO
     from metadata_wrangler_spark.plans import (
         load_all_plans,
         release_session_caches,
@@ -693,18 +694,18 @@ def test_release_session_caches_drops_all_persisted_frames(spark):
 
     load_all_plans()
     sf = "/root/testdata/sf0.001"
-    # Populate both named caches via their public query entry points.
+    # Populate both memo entries via their public query entry points.
     graph_mod.g_bipartite_project(spark, sf).limit(1).collect()
     docs_mod.dd_source_overlap(spark, sf).limit(1).collect()
-    # Both caches must be populated independently, else the clear
-    # assertions below pass vacuously for whichever cache the
+    # Both entries must be populated independently, else the clear
+    # assertions below pass vacuously for whichever entry the
     # populate step stopped filling (round-8 advice).
-    assert graph_mod._BASKET_CACHE
-    assert docs_mod._OVERLAP_CACHE
+    assert (sf, "baskets") in _MEMO[spark]
+    assert (sf, "overlap_baskets") in _MEMO[spark]
 
     release_session_caches(spark)
-    assert not graph_mod._BASKET_CACHE
-    assert not docs_mod._OVERLAP_CACHE
+    assert (sf, "baskets") not in _MEMO[spark]
+    assert (sf, "overlap_baskets") not in _MEMO[spark]
     # Idempotent on an empty session, and queries still run after.
     release_session_caches(spark)
     assert graph_mod.g_bipartite_project(spark, sf).count() > 0
@@ -717,7 +718,9 @@ def _cached_partitions(spark) -> int:
     )
 
 
-def test_iterative_operators_release_checkpoints_synchronously(spark):
+def test_iterative_operators_release_checkpoints_synchronously(
+    spark, monkeypatch
+):
     """Round-9 checkpoint-lifetime bound (SCALE.md round-8 finding
     1): an iterative query's dead localCheckpoint rounds must be
     released by the operator itself, not left for the asynchronous
@@ -727,6 +730,7 @@ def test_iterative_operators_release_checkpoints_synchronously(spark):
     query, at most its small final-result checkpoint may stay pinned
     (a handful of |V|-row partitions), never the edge-table rounds
     (32+ partitions each)."""
+    from metadata_wrangler_spark.operators import closure
     from metadata_wrangler_spark.operators.closure import (
         connected_components,
         equivalent_ids,
@@ -751,16 +755,15 @@ def test_iterative_operators_release_checkpoints_synchronously(spark):
     from metadata_wrangler_spark.plans.graph import build_edges
 
     edges = build_edges(spark, sf)
+    monkeypatch.setattr(closure, "LOCAL_SOLVE_MAX_EDGES", 0)
     before = _cached_partitions(spark)
-    connected_components(edges, local_solve_max_edges=0).count()
+    connected_components(edges).count()
     delta = _cached_partitions(spark) - before
     assert delta <= 40, f"connected_components pinned {delta} partitions"
 
     seeds = edges.select(F.col("src").alias("node")).limit(3)
     before = _cached_partitions(spark)
-    equivalent_ids(
-        edges, seeds, levels=4, threshold=0.0, local_solve_max_edges=0
-    ).count()
+    equivalent_ids(edges, seeds, levels=4, threshold=0.0).count()
     delta = _cached_partitions(spark) - before
     # equivalent_ids' frontier checkpoints ARE the result data and
     # stay pinned until consumed; the edge materialization must not.

@@ -237,10 +237,10 @@ def test_multitable_arrow_buckets_match_expression_spelling(spark):
     assert sgot == sexp
 
 @pytest.mark.parametrize("probe_hamming", [0, 1, 2])
-def test_lsh_topk_tiers_row_identical(spark, probe_hamming):
+def test_lsh_topk_tiers_row_identical(spark, monkeypatch, probe_hamming):
     """The single-table LSH tier probe must only pick an
     implementation, never a result: the fused bucket-scan kernel
-    (budget default) and the bucket-join tier (budget forced to 0)
+    (budget default) and the bucket-join tier (budget patched to 0)
     return identical rows at every probe_hamming level — same
     bucket codes, same probe sets, same rounded cosines, same rank
     tie-breaks."""
@@ -253,19 +253,20 @@ def test_lsh_topk_tiers_row_identical(spark, probe_hamming):
         emb, None, _PLANES, k=5, probe_hamming=probe_hamming,
         query_pred=pred,
     )
+    monkeypatch.setattr(similarity, "FUSED_PAIR_BUDGET", 0)
     join = similarity.lsh_cosine_topk(
         emb, None, _PLANES, k=5, probe_hamming=probe_hamming,
-        query_pred=pred, fused_pair_budget=0,
+        query_pred=pred,
     )
     assert sorted(map(tuple, fused.collect())) == sorted(
         map(tuple, join.collect())
     )
 
 
-def test_ivf_topk_tiers_row_identical(spark):
+def test_ivf_topk_tiers_row_identical(spark, monkeypatch):
     """The IVF tier probe must only pick an implementation, never a
     result: the fused cell-scan kernel (budget default) and the
-    cell-join tier (budget forced to 0) return identical rows —
+    cell-join tier (budget patched to 0) return identical rows —
     same probed cells, same candidates, same rounded cosines, same
     rank tie-breaks."""
     from metadata_wrangler_spark.catalog import load
@@ -276,9 +277,9 @@ def test_ivf_topk_tiers_row_identical(spark):
     fused = similarity.ivf_cosine_topk(
         emb, None, _CENTROIDS, k=5, nprobe=2, query_pred=pred
     )
+    monkeypatch.setattr(similarity, "FUSED_PAIR_BUDGET", 0)
     join = similarity.ivf_cosine_topk(
-        emb, None, _CENTROIDS, k=5, nprobe=2, query_pred=pred,
-        fused_pair_budget=0,
+        emb, None, _CENTROIDS, k=5, nprobe=2, query_pred=pred
     )
     assert sorted(map(tuple, fused.collect())) == sorted(
         map(tuple, join.collect())
@@ -366,7 +367,7 @@ def test_knn_graph_edges_subset_of_bucket_pairs(spark, sf_dir):
 
 
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001"])
-def test_multitable_tiers_row_identical(spark, sf_dir):
+def test_multitable_tiers_row_identical(spark, monkeypatch, sf_dir):
     """The fused collision-scan tier and the bucket-join tier of
     lsh_cosine_topk_multitable must produce IDENTICAL rows — same
     candidate semantics (collide in ANY table), same fold order,
@@ -380,8 +381,9 @@ def test_multitable_tiers_row_identical(spark, sf_dir):
     fused = similarity.lsh_cosine_topk_multitable(
         emb, queries, _TABLES, k=5
     )
+    monkeypatch.setattr(similarity, "FUSED_PAIR_BUDGET", 0)
     joined = similarity.lsh_cosine_topk_multitable(
-        emb, queries, _TABLES, k=5, fused_pair_budget=0
+        emb, queries, _TABLES, k=5
     )
     rows_f = sorted(tuple(r) for r in fused.collect())
     rows_j = sorted(tuple(r) for r in joined.collect())
@@ -389,7 +391,9 @@ def test_multitable_tiers_row_identical(spark, sf_dir):
 
 
 @pytest.mark.parametrize("sf_dir", ["/root/testdata/sf0.001"])
-def test_multitable_tiers_row_identical_with_zero_norm_vectors(spark, sf_dir):
+def test_multitable_tiers_row_identical_with_zero_norm_vectors(
+    spark, monkeypatch, sf_dir
+):
     """Degenerate inputs: zero-norm vectors produce 0/0 = NaN
     cosines. Both tiers must DROP those pairs — round 9's bucket-join
     tier emitted them and Spark's descending sort ranked NaN above
@@ -412,8 +416,9 @@ def test_multitable_tiers_row_identical_with_zero_norm_vectors(spark, sf_dir):
     fused = similarity.lsh_cosine_topk_multitable(
         corpus, queries, _TABLES, k=5
     )
+    monkeypatch.setattr(similarity, "FUSED_PAIR_BUDGET", 0)
     joined = similarity.lsh_cosine_topk_multitable(
-        corpus, queries, _TABLES, k=5, fused_pair_budget=0
+        corpus, queries, _TABLES, k=5
     )
     rows_f = sorted(tuple(r) for r in fused.collect())
     rows_j = sorted(tuple(r) for r in joined.collect())
